@@ -29,10 +29,10 @@ final class BestLiftBuffer(val lifts: Array[Double])
  * actually COMBINES: the shuffle carries one `|vocab|`-double buffer per
  * group instead of every fired pair (collect_list partials concatenate,
  * so they reduce nothing). The consequent vocabulary is bounded driver
- * metadata (it rides the expression like [[FPPatternsAgg]]'s group
- * table), pre-sorted in UTF8 binary order so the eval tie-break is
- * identical to the sort_array formulation this replaces (spec-pinned
- * byte-equal to the UDF path).
+ * metadata (it rides the expression as a constructor field), pre-sorted
+ * in UTF8 binary order so the eval tie-break is identical to the
+ * sort_array formulation this replaces (spec-pinned byte-equal to the UDF
+ * path).
  */
 case class BestRulesAgg(
     consExpr: Expression,

@@ -18,7 +18,7 @@ import scala.collection.mutable
  * first opportunity — every relational stage here stays in DataFrame land
  * so Catalyst supplies column pruning / predicate pushdown / partial
  * aggregation; only the per-group tree mining itself is typed
- * (`groupByKey(...).flatMapGroups`), which is genuinely imperative.
+ * (`repartitionById(...).mapPartitions`), which is genuinely imperative.
  *
  * Pipeline:
  *  1. L1 pass: `explode -> groupBy(item).count -> HAVING count >= minCount`
@@ -29,27 +29,32 @@ import scala.collection.mutable
  *     most one (groupId, rank-prefix) per distinct group — the PFP shuffle
  *     dedup trick (`pfp/FPGrowthCore.scala:121-140`). Shuffled as packed
  *     Int arrays (Tungsten), far cheaper than serialized tree graphs.
- *  4. Per-group [[FPTree]] build + extract with owner-validated suffixes
- *     (exactly-once global emission, no distinct needed downstream).
+ *  4. `repartitionById(numGroups, groupId)`: group g goes to shuffle
+ *     partition g, unhashed and unsorted, so each mining task receives
+ *     exactly one group. The task builds one [[FPTree]] per group id it
+ *     sees and extracts it with owner-validated suffixes (exactly-once
+ *     global emission, no distinct needed downstream).
  *
  * Scale notes (100 TB design): the only data-sized shuffle is step 3,
  * whose volume is bounded by sum(txn length x distinct groups touched)
  * ints — mitigated by the prefix dedup and by dictionary rank encoding
  * (strings never shuffle). Skew across groups is the classic PFP failure
  * mode; `balanced = true` (default, = EPFP) packs item ranks into groups
- * by estimated mining cost via LPT. Group count is decoupled from
- * `spark.sql.shuffle.partitions`. Driver state is only the frequent-item
- * dictionary, which minSupport bounds.
+ * by estimated mining cost via LPT. Because the group id is the shuffle
+ * partition id, that balance holds on the measured tasks: the mining
+ * stage has exactly `numGroups` tasks, decoupled from
+ * `spark.sql.shuffle.partitions`, and no hash can stack two groups in one
+ * task. Driver state is only the frequent-item dictionary, which
+ * minSupport bounds.
  */
 class FPGrowth private (
     private var itemsCol: String,
     private var minSupport: Double,
     private var minConfidence: Double,
     private var numPartitions: Int,
-    private var balanced: Boolean,
-    private var treeAggregation: Boolean) extends Serializable {
+    private var balanced: Boolean) extends Serializable {
 
-  def this() = this("items", 0.3, 0.8, -1, true, false)
+  def this() = this("items", 0.3, 0.8, -1, true)
 
   def setItemsCol(v: String): this.type = { itemsCol = v; this }
   def setMinSupport(v: Double): this.type = {
@@ -74,15 +79,6 @@ class FPGrowth private (
   }
   /** true = EPFP balanced groups (default); false = PFP hash groups. */
   def setBalanced(v: Boolean): this.type = { balanced = v; this }
-
-  /**
-   * true = mine via the [[FPPatternsAgg]] Catalyst aggregate (map-side
-   * partial FP-trees, shuffled as serialized path-multisets — wins with
-   * dense prefix sharing); false (default) = typed flatMapGroups (raw
-   * cond-transactions shuffle — wins when prefixes rarely repeat).
-   * Results are identical (spec-enforced).
-   */
-  def setTreeAggregation(v: Boolean): this.type = { treeAggregation = v; this }
 
   def fit(dataset: Dataset[_]): FPGrowthModel = {
     val spark = dataset.sparkSession
@@ -129,34 +125,24 @@ class FPGrowth private (
       }
 
     val mc = minCount
-    val minedDF: DataFrame =
-      if (treeAggregation) {
-        condTxns.toDF("gid", "ranks")
-          .groupBy(col("gid"))
-          .agg(FPTreeAggregate.fp_patterns(col("gid"), col("ranks"), mc, groupOf)
-            .as("patterns"))
-          .select(explode(col("patterns")).as("p"))
-          .select(col("p.ranks").as("ranks"), col("p.freq").as("freq"))
-          .as[(Seq[Int], Long)]
-          .map { case (ranks, cnt) =>
-            val dict = bcItems.value
-            (ranks.map(dict).toArray, cnt)
+    // Group ids lie in [0, numParts): partition g holds exactly group g.
+    // The per-partition map still keys trees by group id, so the owner
+    // check below never depends on that layout.
+    val minedDF: DataFrame = condTxns
+      .repartitionById(numParts, col("_1"))
+      .mapPartitions { it =>
+        val trees = mutable.LongMap.empty[FPTree]
+        it.foreach { case (gid, txn) => trees.getOrElseUpdate(gid.toLong, new FPTree).add(txn) }
+        val group = bcGroup.value
+        val dict = bcItems.value
+        trees.iterator.flatMap { case (gidL, tree) =>
+          val gid = gidL.toInt
+          tree.extract(mc, r => group(r) == gid).map { case (ranks, cnt) =>
+            (ranks.map(dict), cnt)
           }
-          .toDF("items", "freq")
-      } else {
-        condTxns
-          .groupByKey(_._1)
-          .flatMapGroups { (gid, it) =>
-            val tree = new FPTree
-            it.foreach { case (_, txn) => tree.add(txn) }
-            val group = bcGroup.value
-            val dict = bcItems.value
-            tree.extract(mc, r => group(r) == gid).map { case (ranks, cnt) =>
-              (ranks.map(dict), cnt)
-            }
-          }
-          .toDF("items", "freq")
+        }
       }
+      .toDF("items", "freq")
     val freqItemsets: DataFrame = minedDF.persist(StorageLevel.MEMORY_AND_DISK)
     freqItemsets.count() // materialize before releasing the input
     if (handlePersistence) input.unpersist()
@@ -229,11 +215,10 @@ class FPGrowthModel private[fpm] (
     val itemSupport: Map[String, Double],
     val numTransactions: Long,
     private var itemsCol: String,
-    private var predictionCol: String,
+    private val predictionCol: String,
     private var minConfidence: Double) extends Serializable {
 
   def setItemsCol(v: String): this.type = { itemsCol = v; this }
-  def setPredictionCol(v: String): this.type = { predictionCol = v; this }
   def setMinConfidence(v: Double): this.type = {
     require(v >= 0.0 && v <= 1.0)
     // Invalidate nothing: cache is keyed by confidence (pfp/FPGrowth.scala:94-107).

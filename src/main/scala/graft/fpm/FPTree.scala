@@ -46,7 +46,6 @@ final class FPTree extends Serializable {
     countOf = java.util.Arrays.copyOf(countOf, capacity)
   }
 
-  def nodeCount: Int = size - 1
   def isEmpty: Boolean = size == 1
   def itemSupport(item: Int): Long = supportOf.getOrElse(item.toLong, 0L)
   def items: Iterator[Int] = supportOf.keysIterator.map(_.toInt)

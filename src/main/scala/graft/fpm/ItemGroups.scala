@@ -12,10 +12,12 @@ package graft.fpm
  * all r higher-frequency items.
  *
  * We reproduce both as a precomputed rank->group array — in DataFrame land
- * there is no user `Partitioner`; the group id becomes a grouping column
- * and Spark shuffles on it. This decouples #groups from
- * `spark.sql.shuffle.partitions`, which is what you want at scale: groups
- * are the skew unit, shuffle partitions the parallelism unit.
+ * there is no user `Partitioner`; instead the group id IS the shuffle
+ * partition id ([[FPGrowth]] mines via `repartitionById`), so group g
+ * runs as mining task g. Hashing the id would undo the packing (with four
+ * shuffle partitions, Murmur3 sends group ids 0-3 to only two of them);
+ * passing it through also decouples #groups from
+ * `spark.sql.shuffle.partitions`.
  */
 object ItemGroups {
 

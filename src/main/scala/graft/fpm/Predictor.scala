@@ -15,9 +15,9 @@ import scala.collection.mutable
 object Predictor {
 
   /** Insertion-ordered (item -> bit index) over every antecedent item and
-    * consequent a rule table references — the shared vocabulary BOTH
-    * probe paths ([[predict]]'s UDF and [[predictRelational]]) key their
-    * <= 64-item bitset fast path on; one definition keeps the two paths'
+    * consequent a rule table references — the shared vocabulary both
+    * probes ([[predict]]'s UDF and [[predictRelational]]'s <= 64-item
+    * mask join) key their bitsets on; one definition keeps the two
     * encodings byte-identical (spec-enforced equality depends on it). */
   private def ruleVocab(
       rules: Iterable[(Seq[String], String)]): mutable.LinkedHashMap[String, Int] = {
@@ -33,18 +33,20 @@ object Predictor {
   private def maskOf(items: Seq[String], index: collection.Map[String, Int]): Long =
     items.foldLeft(0L)((m, a) => m | (1L << index(a)))
 
+  @inline private def hasBit(mask: Array[Long], bit: Int): Boolean =
+    (mask(bit >>> 6) & (1L << bit)) != 0L
+
   /**
    * Rules must be pre-sorted by (lift desc, consequent asc).
    *
-   * When the rules reference <= 64 distinct items (the common case: rule
-   * tables are lift-filtered and small even when the corpus is not), the
-   * probe runs on 64-bit masks: a rule fires iff
-   * `(mask & antMask) == antMask && (mask & consBit) == 0`, and
-   * first-occurrence dedup is one more bit test — two branch-free ANDs
-   * per rule instead of a hash probe per antecedent item. Measured ~4x on
-   * the 147k-basket x 600-rule benchmark query; output is byte-identical
-   * to the generic set-probe path (spec-enforced), which remains the
-   * fallback for wider rule vocabularies.
+   * One multi-word bitset probe over the rule vocabulary: each row folds
+   * its items into a `ceil(|vocab| / 64)`-word mask (items outside the
+   * vocab cannot affect any rule and are skipped), and each rule holds its
+   * antecedent as vocab bit ids plus one consequent bit id. A rule fires
+   * iff its consequent bit is clear in both the row mask and the `seen`
+   * mask (first-occurrence dedup) and every antecedent bit is set — a few
+   * shift-and-AND tests per rule instead of a hash probe per antecedent
+   * item. At <= 64 items the mask is one word. A null basket predicts null.
    */
   def predict(
       data: DataFrame,
@@ -52,52 +54,41 @@ object Predictor {
       itemsCol: String,
       predictionCol: String): DataFrame = {
     val vocab = ruleVocab(rules.map { case (ant, cons, _) => (ant.toSeq, cons) })
-    val predictUDF =
-      if (vocab.size <= 64) {
-        val index = vocab.toMap
-        val antMasks = rules.map { case (ant, _, _) => maskOf(ant.toSeq, index) }
-        val consBits = rules.map { case (_, cons, _) => maskOf(Seq(cons), index) }
-        val conses = rules.map(_._2)
-        val bc = data.sparkSession.sparkContext
-          .broadcast((index, antMasks, consBits, conses))
-        udf { items: Seq[String] =>
-          if (items == null) null
-          else {
-            val (idx, ams, cbs, cs) = bc.value
-            var mask = 0L
-            items.foreach { it =>
-              val i = idx.getOrElse(it, -1)
-              if (i >= 0) mask |= 1L << i
-            }
-            var seen = 0L
-            val sb = new java.lang.StringBuilder
-            var r = 0
-            while (r < ams.length) {
-              val am = ams(r); val cb = cbs(r)
-              if ((mask & am) == am && (mask & cb) == 0L && (seen & cb) == 0L) {
-                if (sb.length > 0) sb.append(", ")
-                sb.append(cs(r))
-                seen |= cb
-              }
-              r += 1
-            }
-            sb.toString
-          }
+    val index = vocab.toMap
+    val words = math.max(1, (vocab.size + 63) >>> 6)
+    val antBits = rules.map { case (ant, _, _) => ant.map(index) }
+    val consBits = rules.map { case (_, cons, _) => index(cons) }
+    val conses = rules.map(_._2)
+    val bc = data.sparkSession.sparkContext.broadcast((index, antBits, consBits, conses))
+    val predictUDF = udf { items: Seq[String] =>
+      if (items == null) null
+      else {
+        val (idx, abs, cbs, cs) = bc.value
+        val mask = new Array[Long](words)
+        items.foreach { it =>
+          val i = idx.getOrElse(it, -1)
+          if (i >= 0) mask(i >>> 6) |= 1L << i
         }
-      } else {
-        val bcRules = data.sparkSession.sparkContext.broadcast(rules)
-        udf { items: Seq[String] =>
-          if (items == null) null
-          else {
-            val itemset = items.toSet
-            val picked = mutable.LinkedHashSet.empty[String]
-            bcRules.value.foreach { case (ant, cons, _) =>
-              if (!itemset.contains(cons) && ant.forall(itemset.contains)) picked += cons
+        val seen = new Array[Long](words)
+        val sb = new java.lang.StringBuilder
+        var r = 0
+        while (r < cbs.length) {
+          val cb = cbs(r)
+          if (!hasBit(mask, cb) && !hasBit(seen, cb)) {
+            val ab = abs(r)
+            var k = 0
+            while (k < ab.length && hasBit(mask, ab(k))) k += 1
+            if (k == ab.length) {
+              if (sb.length > 0) sb.append(", ")
+              sb.append(cs(r))
+              seen(cb >>> 6) |= 1L << cb
             }
-            picked.mkString(", ")
           }
+          r += 1
         }
+        sb.toString
       }
+    }
     data.withColumn(predictionCol, predictUDF(col(itemsCol)))
   }
 
@@ -118,7 +109,7 @@ object Predictor {
    * restore-rows join merely duplicated predictions). Callers own the
    * invariant; checking it would cost the pass this rewrite removed.
    *
-   * Probe encodings, mirroring [[predict]]'s two paths:
+   * Probe encodings:
    *  - rule vocab <= 64: one O(|items|) dictionary fold precomputes a
    *    64-bit item mask per row, and the probe collapses to two codegen'd
    *    integer ANDs per (row, rule) — no per-pair array walks.

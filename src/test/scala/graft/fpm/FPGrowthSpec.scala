@@ -61,20 +61,30 @@ class FPGrowthSpec extends AnyFunSuite {
     }
   }
 
-  test("Catalyst tree-aggregation path matches flatMapGroups path exactly") {
+  test("mining shuffle gives group g partition g, whatever the shuffle partitions and AQE") {
     import spark.implicits._
-    val rng = new scala.util.Random(99)
-    val items = (0 until 15).map(i => s"tt$i")
-    val df = Seq.fill(400)(rng.shuffle(items).take(1 + rng.nextInt(7))).toDF("items")
-      .repartition(5) // force multiple map-side partial trees per group
-    for (parts <- Seq(2, 5)) {
-      val viaGroups = itemsetsOf(new FPGrowth()
-        .setMinSupport(0.03).setNumPartitions(parts).fit(df))
-      val viaAgg = itemsetsOf(new FPGrowth()
-        .setMinSupport(0.03).setNumPartitions(parts).setTreeAggregation(true).fit(df))
-      assert(viaAgg == viaGroups, s"parts=$parts")
-      assert(viaAgg.nonEmpty)
-    }
+    val rng = new scala.util.Random(7)
+    val items = (0 until 10).map(i => s"mp$i")
+    val df = Seq.fill(300)(rng.shuffle(items).take(1 + rng.nextInt(5))).toDF("items")
+    val expected = new org.apache.spark.ml.fpm.FPGrowth()
+      .setMinSupport(0.05).setItemsCol("items").fit(df).freqItemsets
+      .as[(Seq[String], Long)].collect().map { case (i, f) => i.toSet -> f }.toMap
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    val saved = keys.map(k => k -> spark.conf.get(k))
+    try {
+      spark.conf.set("spark.sql.shuffle.partitions", "2")
+      for (aqe <- Seq(true, false)) {
+        spark.conf.set("spark.sql.adaptive.enabled", aqe.toString)
+        val model = new FPGrowth().setMinSupport(0.05).setNumPartitions(5).fit(df)
+        assert(model.itemSupport.size >= 5, s"aqe=$aqe")
+        val rdd = model.freqItemsets.rdd
+        assert(rdd.getNumPartitions == 5, s"aqe=$aqe")
+        // each group owns at least its single-item itemsets
+        val sizes = rdd.mapPartitions(it => Iterator(it.size)).collect()
+        assert(sizes.forall(_ > 0), s"aqe=$aqe sizes=${sizes.mkString(",")}")
+        assert(itemsetsOf(model) == expected, s"aqe=$aqe")
+      }
+    } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 
   test("association rules match MLlib (confidence + support) and compute lift") {
